@@ -94,13 +94,92 @@ def _fuzz_pairs(n=800, seed=11):
     return out
 
 
+# astral code points and embedded / trailing NULs: the batched kernels
+# build fixed-width code-point matrices, where NUL is also the padding
+_EDGE_STRINGS = ["\U0001F600", "a\U0001F600b", "\U00010348\U0010FFFF",
+                 "\x00", "a\x00", "\x00a", "a\x00b", "\x00\x00",
+                 "中\x00文", "\x02\x03"]
+_EDGE_PAIRS = [(a, b) for a in _EDGE_STRINGS for b in _EDGE_STRINGS + [""]]
+
+
 def test_jaro_winkler_batch_bitexact_vs_scalar():
     from wdel_spark.functions import jaro_winkler_batch
 
-    pairs = _fuzz_pairs()
+    pairs = _fuzz_pairs() + _EDGE_PAIRS
     batch = jaro_winkler_batch([p[0] for p in pairs], [p[1] for p in pairs])
     scalar = np.array([jaro_winkler(a, b) for a, b in pairs])
     np.testing.assert_array_equal(batch, scalar)
+
+
+def _hash_embed_scalar(texts, dim=128):
+    """The per-gram reference: signed crc32 feature hashing of the char
+    2- and 3-grams of ``"\x02" + text + "\x03"``, one row at a time,
+    then ``v / np.linalg.norm(v)`` in float32."""
+    import zlib
+
+    out = np.zeros((len(texts), dim), dtype=np.float32)
+    for row, text in enumerate(texts):
+        if not text:
+            continue
+        padded = f"\x02{text}\x03"
+        v = out[row]
+        for n in (2, 3):
+            for i in range(len(padded) - n + 1):
+                h = zlib.crc32(padded[i:i + n].encode("utf-8"))
+                v[(h & 0x7FFFFFFF) % dim] += (
+                    np.float32(1.0) if (h >> 31) & 1 == 0
+                    else np.float32(-1.0))
+        nrm = np.linalg.norm(v)
+        if nrm > 0:
+            v /= nrm
+    return out
+
+
+def test_hash_embed_bitexact_vs_scalar_reference():
+    import random
+
+    rng = random.Random(7)
+    alph = ("abcxyz 中文字符漢語体育é\x00\x02\x03"
+            "\U0001F600\U00010348\U0010FFFF")
+    big = ["".join(rng.choices(alph, k=rng.randint(0, 24)))
+           for _ in range(10_000)]
+    cases = [
+        ["", "", ""],
+        ["a", "b", "中", "\U0001F600", "\x00"],
+        ["中文字符", "漢語体育", "中國體育 中国"],
+        _EDGE_STRINGS,
+        # a bucket sum of squares past 2**24 (float32's exact integers)
+        ["x" * 3000, "ab" * 2500, ""],
+        big,
+    ]
+    for texts in cases:
+        for dim in (128, 7):
+            got = hash_embed(texts, dim)
+            want = _hash_embed_scalar(texts, dim)
+            assert got.dtype == np.float32 and got.shape == want.shape
+            np.testing.assert_array_equal(
+                got.view(np.uint32), want.view(np.uint32))
+
+
+def test_seq_cosine_batch_is_the_sequential_fold():
+    from wdel_spark.functions.scoring import seq_cosine_batch
+
+    rng = np.random.RandomState(3)
+    a = rng.standard_normal((257, 128)).astype(np.float32)
+    b = rng.standard_normal((257, 128)).astype(np.float32)
+    a[5] = 0.0
+    want = []
+    for x, y in zip(a.astype(np.float64), b.astype(np.float64)):
+        dot = nm = ne = 0.0
+        for xj, yj in zip(x, y):
+            dot += xj * yj
+            nm += xj * xj
+            ne += yj * yj
+        den = np.sqrt(nm) * np.sqrt(ne)
+        want.append(dot / den if den > 0 else 0.0)
+    np.testing.assert_array_equal(
+        seq_cosine_batch(a, b).view(np.uint64),
+        np.array(want, dtype=np.float64).view(np.uint64))
 
 
 def test_pair_score_batch_bitexact_vs_scalar():

@@ -170,3 +170,30 @@ def test_window_group_limit_prunes_topk_and_hydrate(spark):
         spark, SF))
     assert "WindowGroupLimit" in _plan(qs["entity_hydrate_nested"](
         spark, SF))
+
+
+# ------------------------------------------------------ codegen cache
+
+
+def test_warm_er_rerun_compiles_no_classes(spark, tmp_path):
+    """A warm rerun of the flagship and the stored-corpus ER job must
+    find every generated class in Spark's codegen cache: together they
+    generate more classes than the default 100-entry cache holds, which
+    made every rerun recompile ~100 classes in Janino."""
+    from wdel_spark.entry_pipeline import (
+        er_over_testdata, materialize_corpus, run_er_from_parquet)
+
+    cd = str(tmp_path / "corpus")
+    materialize_corpus(spark, n_docs=120, n_entities=40, out_dir=cd,
+                       n_partitions=4)
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+
+    def one_pass():
+        er_over_testdata(spark, SF).count()
+        run_er_from_parquet(spark, cd).count()
+
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() - before == 0

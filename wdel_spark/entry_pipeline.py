@@ -13,8 +13,6 @@ keys) — the same shuffle/skew profile as the synthetic corpus at scale.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W

@@ -15,6 +15,7 @@ cluster-level agreement is by construction (tested anyway).
 
 from __future__ import annotations
 
+import operator
 import zlib
 
 import numpy as np
@@ -91,6 +92,14 @@ def levenshtein(a: str, b: str) -> int:
     return prev[lb]
 
 
+def _code_points(strs: "list[str]", width: int) -> np.ndarray:
+    """``[len(strs), width]`` uint32 code-point matrix, zero-padded on the
+    right, built by numpy's fixed-width unicode dtype in one call (an
+    embedded or trailing NUL reads 0, the same as the padding)."""
+    return np.array(strs, dtype=f"<U{width}").view(np.uint32).reshape(
+        len(strs), width)
+
+
 def jaro_winkler_batch(
     a_list: "list[str]", b_list: "list[str]", prefix_scale: float = 0.1
 ) -> np.ndarray:
@@ -108,23 +117,17 @@ def jaro_winkler_batch(
     out = np.zeros(n, dtype=np.float64)
     if n == 0:
         return out
-    la = np.fromiter((len(a) for a in a_list), dtype=np.int64, count=n)
-    lb = np.fromiter((len(b) for b in b_list), dtype=np.int64, count=n)
-    eq = np.fromiter((a == b for a, b in zip(a_list, b_list)),
-                     dtype=bool, count=n)
+    la = np.fromiter(map(len, a_list), dtype=np.int64, count=n)
+    lb = np.fromiter(map(len, b_list), dtype=np.int64, count=n)
+    eq = np.fromiter(map(operator.eq, a_list, b_list), dtype=bool, count=n)
     out[eq] = 1.0
     act = np.nonzero(~eq & (la > 0) & (lb > 0))[0]
     if len(act) == 0:
         return out
     la_a, lb_a = la[act], lb[act]
     La, Lb = int(la_a.max()), int(lb_a.max())
-    ac = np.zeros((len(act), La), dtype=np.uint32)
-    bc = np.zeros((len(act), Lb), dtype=np.uint32)
-    for r, i in enumerate(act):
-        ac[r, : la_a[r]] = np.frombuffer(
-            a_list[i].encode("utf-32-le"), dtype=np.uint32)
-        bc[r, : lb_a[r]] = np.frombuffer(
-            b_list[i].encode("utf-32-le"), dtype=np.uint32)
+    ac = _code_points([a_list[i] for i in act], La)
+    bc = _code_points([b_list[i] for i in act], Lb)
     mw = np.maximum(np.maximum(la_a, lb_a) // 2 - 1, 0)
     a_flags = np.zeros_like(ac, dtype=bool)
     b_flags = np.zeros_like(bc, dtype=bool)
@@ -190,8 +193,8 @@ def pair_score_batch(
             dtype=np.float64, count=len(m))
     else:
         lev_arr = np.asarray(lev, dtype=np.float64)
-    lm = np.fromiter((len(x) for x in m), dtype=np.float64, count=len(m))
-    la = np.fromiter((len(x) for x in a), dtype=np.float64, count=len(a))
+    lm = np.fromiter(map(len, m), dtype=np.float64, count=len(m))
+    la = np.fromiter(map(len, a), dtype=np.float64, count=len(a))
     maxlen = np.maximum(np.maximum(lm, la), 1.0)
     lev_sim = 1.0 - np.minimum(lev_arr, maxlen) / maxlen
     jw = jaro_winkler_batch(m, a)
@@ -199,56 +202,70 @@ def pair_score_batch(
     return W_JW * jw + W_LEV * lev_sim + W_COS * cos_arr
 
 
-def _ngrams(s: str, ns: tuple[int, ...] = (2, 3)) -> list[str]:
-    padded = f"\x02{s}\x03"
-    out: list[str] = []
-    for n in ns:
-        if len(padded) >= n:
-            out.extend(padded[i : i + n] for i in range(len(padded) - n + 1))
-    return out
-
-
-# gram -> (bucket, sign) memo: the gram vocabulary of any real corpus is
-# tiny relative to the gram *stream* (Zipf), so this makes hash_embed
-# ~amortized-dict-lookup per gram.  Purely an evaluation cache — results
-# are byte-identical with or without it.  Per-dim keying; soft-capped.
-_GRAM_CACHE: dict[tuple[str, int], tuple[int, np.float32]] = {}
-_GRAM_CACHE_MAX = 1 << 20
-
-
-def _gram_feature(g: str, dim: int) -> tuple[int, np.float32]:
-    key = (g, dim)
-    hit = _GRAM_CACHE.get(key)
-    if hit is None:
-        h = zlib.crc32(g.encode("utf-8"))
-        hit = ((h & 0x7FFFFFFF) % dim,
-               np.float32(1.0) if (h >> 31) & 1 == 0 else np.float32(-1.0))
-        if len(_GRAM_CACHE) < _GRAM_CACHE_MAX:
-            _GRAM_CACHE[key] = hit
-    return hit
+_CP_BITS = 21  # every code point is < 0x110000 <= 2**21
 
 
 def hash_embed(texts: "list[str] | np.ndarray", dim: int = EMBED_DIM) -> np.ndarray:
     """Deterministic hashed char-n-gram embedding, L2-normalized.
 
-    Signed feature hashing (crc32 bucket + sign bit) over char 2/3-grams.
+    Signed feature hashing (crc32 bucket + sign bit) over char 2/3-grams
+    of ``"\\x02" + text + "\\x03"``; empty texts embed to the zero vector.
     Replaces the BERT bi-encoder (`model.py:43-59`) with a seedless,
     weight-free encoder so tests are hermetic.  Batched: one [B, dim]
     float32 matrix per call — the Arrow-batch analog of the reference's
     DataLoader batching (`encode_item.py:226-246`).
-    """
-    out = np.zeros((len(texts), dim), dtype=np.float32)
-    feat = _gram_feature
-    for row, text in enumerate(texts):
-        if not text:
-            continue
-        v = out[row]
-        for g in _ngrams(text):
-            idx, sign = feat(g, dim)
-            v[idx] += sign
-        n = np.linalg.norm(v)
-        if n > 0:
-            v /= n
+
+    Vectorized over the whole batch: every gram becomes one int64 key
+    (its code points + 1, 21 bits each, so a 2-gram's top field is 0 and
+    keys of different widths never collide), ``np.unique`` leaves one
+    ``zlib.crc32`` call per distinct gram, and one ``np.bincount`` adds
+    the signs of all rows.  Bucket sums are small integers, so they are
+    exact in any order; the norm is float32 ``sqrt`` of the exact sum of
+    squares and the divide is float32, the same correctly rounded
+    operations as a per-row ``v / np.linalg.norm(v)``."""
+    n = len(texts)
+    out = np.zeros((n, dim), dtype=np.float32)
+    live = np.fromiter(map(bool, texts), dtype=bool, count=n)
+    if not live.any():
+        return out
+    padded = [f"\x02{t}\x03" for t in texts if t]
+    joined = "".join(padded)
+    cp = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32
+                       ).astype(np.int64) + 1
+    lens = np.fromiter(map(len, padded), dtype=np.int64, count=len(padded))
+    ends = np.cumsum(lens)
+    # a 2-gram may start anywhere but a row's last char, a 3-gram also
+    # not on its second-to-last (every padded text has >= 3 chars)
+    ok2 = np.ones(len(cp), dtype=bool)
+    ok2[ends - 1] = False
+    ok3 = ok2.copy()
+    ok3[ends - 2] = False
+    p2, p3 = np.flatnonzero(ok2), np.flatnonzero(ok3)
+    starts = np.concatenate([p2, p3])
+    keys = np.concatenate([
+        (cp[p2] << _CP_BITS) | cp[p2 + 1],
+        (cp[p3] << 2 * _CP_BITS) | (cp[p3 + 1] << _CP_BITS) | cp[p3 + 2],
+    ])
+    uniq, first, inv = np.unique(keys, return_index=True, return_inverse=True)
+    width = np.where(uniq >> 2 * _CP_BITS > 0, 3, 2)
+    h = np.fromiter(
+        (zlib.crc32(joined[s : s + w].encode("utf-8"))
+         for s, w in zip(starts[first].tolist(), width.tolist())),
+        dtype=np.int64, count=len(uniq))
+    bucket = (h & 0x7FFFFFFF) % dim
+    sign = np.where((h >> 31) & 1 == 0, 1.0, -1.0)
+    row = np.repeat(np.flatnonzero(live), lens)[starts]
+    acc = np.bincount(row * dim + bucket[inv], weights=sign[inv],
+                      minlength=n * dim).reshape(n, dim)
+    out[:] = acc
+    sumsq = np.einsum("ij,ij->i", acc, acc)
+    norm = np.sqrt(sumsq.astype(np.float32))
+    # float32 holds integers exactly only below 2**24; past that the
+    # float32 dot's own rounding is the reference, so ask it directly
+    for r in np.flatnonzero(sumsq >= 1 << 24):
+        norm[r] = np.linalg.norm(out[r])
+    nz = norm > 0
+    out[nz] /= norm[nz, None]
     return out
 
 
@@ -256,30 +273,27 @@ def seq_cosine_batch(a, b) -> np.ndarray:
     """Row-wise cosine of two [B, d] float32 matrices, computed as a
     SEQUENTIAL left-fold over doubles in dimension order.
 
-    Bit-identical to the Catalyst formulation the signature scorer uses
-    JVM-side (r4 — the cosine moved out of Python so entity vectors never
-    cross Arrow):
-
-        dot  = aggregate(zip_with(m, e, (x, y) -> x * y), 0.0, acc + x)
-        cos  = dot / (sqrt(aggregate(transform(m, x*x), ...)) * ...)
-
-    numpy's einsum/dot use pairwise/SIMD summation (different association
-    order, different last-ulp results), so this helper folds dimension j
-    across the whole batch per step — each ROW's accumulation order is
-    exactly j = 0..d-1, matching the JVM fold and the scalar Python loop.
-    The pandas oracle and the row-level scorer both use this so score
-    equality with the JVM path stays exact, not approximate."""
+    The signature scorer (``score_pair_sigs``), the row-level scorer and
+    the pandas oracle all call this one kernel, so their scores agree
+    bit for bit.  numpy's einsum/dot use pairwise/SIMD summation
+    (different association order, different last-ulp results), so this
+    helper folds dimension j across the whole batch per step — each
+    ROW's accumulation order is exactly j = 0..d-1, the same as the
+    scalar loop ``dot += a[j] * b[j]``.  The fold walks the transposed,
+    contiguous matrices so every step reads one contiguous row."""
     a64 = np.asarray(a, dtype=np.float64)
     b64 = np.asarray(b, dtype=np.float64)
     n, d = a64.shape
+    aT = np.ascontiguousarray(a64.T)
+    bT = np.ascontiguousarray(b64.T)
     dot = np.zeros(n, dtype=np.float64)
     nm = np.zeros(n, dtype=np.float64)
     ne = np.zeros(n, dtype=np.float64)
-    for j in range(d):
-        x, y = a64[:, j], b64[:, j]
-        dot += x * y
-        nm += x * x
-        ne += y * y
+    tmp = np.empty(n, dtype=np.float64)
+    for x, y in zip(aT, bT):
+        dot += np.multiply(x, y, out=tmp)
+        nm += np.multiply(x, x, out=tmp)
+        ne += np.multiply(y, y, out=tmp)
     denom = np.sqrt(nm) * np.sqrt(ne)
     with np.errstate(divide="ignore", invalid="ignore"):
         return np.where(denom > 0, dot / denom, 0.0)

@@ -359,11 +359,11 @@ def score_pair_sigs(pair_sigs: DataFrame, kb: DataFrame) -> DataFrame:
     the 512-byte entity vectors join (broadcast) AFTER — the shuffle
     moves ~60 bytes/row instead of ~600 (measured 10x).
 
-    Embeds each distinct norm_mention once per Arrow batch (further
-    deduped in-batch; the gram memo makes repeats cheap), scores against
-    the entity vector + alias string, and collapses alias variants to the
-    per-(mention, qid) max — the same value the row-level scorer +
-    groupBy-max produces.
+    Embeds each distinct norm_mention of an Arrow batch once (the batch's
+    norms are deduped before ``hash_embed``, which hashes each distinct
+    gram once), scores against the entity vector + alias string, and
+    collapses alias variants to the per-(mention, qid) max — the same
+    value the row-level scorer + groupBy-max produces.
 
     Design note (r4): a variant that moved the cosine JVM-side (embed
     per distinct norm in one stage, ``aggregate(zip_with(...))`` dot per

@@ -25,7 +25,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get(
+        "SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     shuffle_partitions = shuffle_partitions or cores
     # one BLAS thread per python worker: N workers × multi-threaded
     # OpenBLAS oversubscribes the box N× and *reverses* core scaling —
@@ -81,6 +82,14 @@ def get_spark(
         # 41.6/51.4 s.)  Scale-neutral by construction; size via env for
         # other memory budgets.
         .config("spark.ui.enabled", "false")
+        # Spark's generated-class cache holds 100 entries by default, but
+        # one stored-corpus ER run (run_er_from_parquet) generates 115
+        # distinct classes, the flagship 99, and the contract query mix
+        # plus an ER run about 380 in one session: at 100 every warm rerun
+        # of the ER job evicted and Janino-recompiled 87-101 classes (and
+        # the JIT then compiled those fresh classes again).  1000 keeps
+        # them: a warm rerun compiles none.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     offheap = os.environ.get("WDEL_SPARK_OFFHEAP", "8g")
